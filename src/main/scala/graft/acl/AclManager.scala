@@ -1,9 +1,5 @@
 package graft.acl
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.duration._
-import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -39,9 +35,6 @@ object AclManager {
     b.build()
   }
 
-  private def withPool[T](threads: Int)(body: ExecutionContext => T): T =
-    Fs.withPool(threads)(body)
-
   /** Multithreaded `modifyAclEntries` over paths; paths that vanished are
     * skipped (reference acl/AclManager.scala:57-80); retry ≤5.
     */
@@ -61,22 +54,8 @@ object AclManager {
     if (paths.isEmpty || permissions.isEmpty) return Seq.empty
     val fs = Fs.getFileSystem(conf, paths.head)
     val entries = permissions.map(getAclEntry).asJava
-    val existing = paths.filter(p => fs.exists(new Path(p)))
-    Retry.retryFailed[String](
-      existing,
-      work => withPool(threads) { implicit ec =>
-        val fut = work.map { p => Future {
-          val ok = try { fs.modifyAclEntries(new Path(p), entries); true }
-                   catch { case _: Throwable => false }
-          FsOperationResult(p, ok)
-        }}
-        fut.map(Await.result(_, Fs.OpTimeout))
-      },
-      identity,
-      // "vanished paths are skipped" must also hold for paths deleted
-      // AFTER the exists() pre-filter (temp/_SUCCESS files mid-run) —
-      // count them as done instead of failing the whole batch
-      repair = failed => failed.filter(p => !fs.exists(new Path(p))))
+    Retry.runPooled[String](paths, threads, identity)(p =>
+      ifPresent(fs, new Path(p))(fs.modifyAclEntries(_, entries)))
   }
 
   def modifyAcls(paths: Seq[String], permissions: Seq[FsPermission])(
@@ -131,18 +110,18 @@ object AclManager {
       implicit conf: Configuration): Seq[FsOperationResult] = {
     if (paths.isEmpty) return Seq.empty
     val fs = Fs.getFileSystem(conf, paths.head)
-    Retry.retryFailed[String](
-      paths.filter(p => fs.exists(new Path(p))),
-      work => withPool(threads) { implicit ec =>
-        val fut = work.map { p => Future {
-          val ok = try { fs.removeAcl(new Path(p)); true }
-                   catch { case _: Throwable => false }
-          FsOperationResult(p, ok)
-        }}
-        fut.map(Await.result(_, Fs.OpTimeout))
-      },
-      identity,
-      repair = failed => failed.filter(p => !fs.exists(new Path(p))))
+    Retry.runPooled[String](paths, threads, identity)(p => ifPresent(fs, new Path(p))(fs.removeAcl))
+  }
+
+  /** The per-path rule every ACL operator shares, driver pool and Spark
+    * task alike: a path that vanished (temp/_SUCCESS files mid-run) is
+    * a skipped success. It is checked inside the path's own effect, so
+    * the checks run concurrently and a path deleted between attempts
+    * still counts as done (reference acl/AclManager.scala:57-80).
+    */
+  private def ifPresent(fs: FileSystem, path: Path)(op: Path => Unit): Boolean = {
+    if (fs.exists(path)) op(path)
+    true
   }
 
   def clearFolderAcl(uri: String)(implicit conf: Configuration): Seq[FsOperationResult] =
@@ -211,12 +190,10 @@ object AclManager {
         val op = opBuilder()
         it.map { p =>
           val path = new Path(p)
-          val ok = try {
+          FsOperationResult.attempt(p) {
             val fs = path.getFileSystem(c)
-            if (fs.exists(path)) op(fs, path)
-            true // vanished paths are skipped-success, as in the driver variant
-          } catch { case _: Throwable => false }
-          FsOperationResult(p, ok)
+            ifPresent(fs, path)(op(fs, _))
+          }
         }
       })
   }

@@ -1,9 +1,7 @@
 package graft.compact
 
-import java.util.concurrent.Executors
-
 import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, Future}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -114,11 +112,9 @@ object Compactor {
       distributedListing: Boolean = false, zorderCols: Seq[String] = Nil)(
       implicit spark: SparkSession): Map[String, Int] = {
     val leaves = getLowestFoldersPaths(tablePath, distributedListing)
-    val pool = Executors.newFixedThreadPool(concurrency.max(1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
+    Fs.withPool(concurrency) { implicit ec =>
       val futures = leaves.map(l => Future(l -> doAutoCoalesce(l, requestedSizeMb, zorderCols)))
       futures.map(Await.result(_, Duration.Inf)).toMap
-    } finally pool.shutdown()
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.fs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Tree diff + rsync-lite synchronization.
@@ -19,8 +20,8 @@ object Delta {
     * arithmetic the way a raw string offset would.
     */
   private[graft] def rel(root: String)(p: String): String = {
-    val rootPath = new org.apache.hadoop.fs.Path(root).toUri.getPath.stripSuffix("/")
-    val pp = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    val rootPath = new Path(root).toUri.getPath.stripSuffix("/")
+    val pp = new Path(p).toUri.getPath
     require(pp.startsWith(rootPath + "/"), s"listed path $p is not under root $root")
     pp.substring(rootPath.length + 1)
   }
@@ -35,7 +36,7 @@ object Delta {
     * on rooted listings.
     */
   private[graft] def relCol(root: String)(path: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val rootPath = new org.apache.hadoop.fs.Path(root).toUri.getPath.stripSuffix("/")
+    val rootPath = new Path(root).toUri.getPath.stripSuffix("/")
     val uriPath = regexp_replace(path, "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
     when(substring(uriPath, 1, rootPath.length + 1) === lit(rootPath + "/"),
       substring(uriPath, rootPath.length + 2, Int.MaxValue))
@@ -43,7 +44,7 @@ object Delta {
         lit("listed path "), path, lit(s" is not under root $root"))))
   }
 
-  /** Both directions of the tree diff.
+  /** Both directions of the tree diff, from driver listings.
     *
     * @param checkContent when true, files are additionally compared by a
     *        distributed content hash (FNV-1a 64 over the byte stream) —
@@ -55,59 +56,48 @@ object Delta {
       implicit spark: SparkSession): (Array[DeltaEntry], Array[DeltaEntry]) = {
     import spark.implicits._
     implicit val conf = spark.sparkContext.hadoopConfiguration
-    val sourceUri = sourceUri0.stripSuffix("/")
-    val targetUri = targetUri0.stripSuffix("/")
-
-    def side(rootUri: String) = {
-      val listed = spark.createDataset(Fs.list(rootUri).toIndexedSeq
-          .map(e => (e.path, e.isDirectory, e.byteSize)))
-        .toDF("path", "isDirectory", "byteSize")
-        .withColumn("relPath", relCol(rootUri)($"path"))
-      if (!checkContent) listed.withColumn("contentHash", lit(0L))
-      else {
-        val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-        listed.as[(String, Boolean, Long, String)].mapPartitions { it =>
-          val c = sconf.value
-          it.map { case (path, isDir, size, rel) =>
-            val h = if (isDir) 0L else contentHash(c, path)
-            (path, isDir, size, rel, h)
-          }
-        }.toDF("path", "isDirectory", "byteSize", "relPath", "contentHash")
-      }
-    }
-
-    val src = side(sourceUri)
-    val trg = side(targetUri)
-    val keys = Seq("relPath", "isDirectory", "byteSize", "contentHash")
-    // carry isDirectory into the entries: synchronize needs it and the
-    // listing already knows it — re-statting every missing path would be
-    // one RPC per entry on the source FS
-    val missing = src.join(trg, keys, "left_anti")
-      .select($"relPath", $"isDirectory").as[(String, Boolean)].collect()
-      .map { case (p, d) => DeltaEntry(p, DeltaEntry.MissingInTarget, d) }
-    val extra = trg.join(src, keys, "left_anti")
-      .select($"relPath", $"isDirectory").as[(String, Boolean)].collect()
-      .map { case (p, d) => DeltaEntry(p, DeltaEntry.OnlyInTarget, d) }
-    (missing, extra)
+    def side(rootUri: String) =
+      keyed(spark.createDataset(Fs.list(rootUri).toIndexedSeq), rootUri, checkContent)
+    diff(side(sourceUri0.stripSuffix("/")), side(targetUri0.stripSuffix("/"))).collect()
+      .partition(_.message == DeltaEntry.MissingInTarget)
   }
 
-  /** Distributed-listing twin of getDelta's hashing stage: files gain a
-    * content hash computed in the tasks that would read them anyway at
-    * copy time (dirs hash 0; with checkContent off the column is a
-    * constant so the diff keys keep one shape).
+  /** The one tree diff: source entries absent from the target
+    * ([[DeltaEntry.MissingInTarget]]) and target entries absent from
+    * the source ([[DeltaEntry.OnlyInTarget]]), as left-anti joins on
+    * the [[keyed]] columns. Entries carry isDirectory from the listing:
+    * synchronize needs it, and re-statting every missing path would be
+    * one RPC per entry on the source FS.
     */
-  private def withContentHash(list: org.apache.spark.sql.Dataset[FsElement],
-      checkContent: Boolean)(implicit spark: SparkSession): org.apache.spark.sql.DataFrame = {
+  private def diff(src: DataFrame, trg: DataFrame)(implicit spark: SparkSession): Dataset[DeltaEntry] = {
     import spark.implicits._
-    if (!checkContent) list.toDF().withColumn("contentHash", lit(0L))
-    else {
-      val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-      list.mapPartitions { it =>
-        val c = sconf.value
-        it.map(e => (e.path, e.isDirectory, e.byteSize,
-          if (e.isDirectory) 0L else contentHash(c, e.path)))
-      }.toDF("path", "isDirectory", "byteSize", "contentHash")
-    }
+    val keys = Seq("relPath", "isDirectory", "byteSize", "contentHash")
+    def onlyIn(a: DataFrame, b: DataFrame, message: String) =
+      a.join(b, keys, "left_anti").select($"relPath".as("path"), lit(message).as("message"), $"isDirectory")
+    onlyIn(src, trg, DeltaEntry.MissingInTarget)
+      .union(onlyIn(trg, src, DeltaEntry.OnlyInTarget)).as[DeltaEntry]
+  }
+
+  /** One side of the diff: a listing plus its path relative to
+    * `rootUri` and, for files, a content hash computed in the tasks
+    * that would read them anyway at copy time (dirs hash 0; with
+    * checkContent off the column is a constant so the diff keys keep
+    * one shape).
+    */
+  private def keyed(list: Dataset[FsElement], rootUri: String, checkContent: Boolean)(
+      implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val hashed =
+      if (!checkContent) list.toDF().withColumn("contentHash", lit(0L))
+      else {
+        val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+        list.mapPartitions { it =>
+          val c = sconf.value
+          it.map(e => (e.path, e.isDirectory, e.byteSize,
+            if (e.isDirectory) 0L else contentHash(c, e.path)))
+        }.toDF("path", "isDirectory", "byteSize", "contentHash")
+      }
+    hashed.withColumn("relPath", relCol(rootUri)($"path"))
   }
 
   /** Fully-distributed diff (SURVEY §7.4.1-3): listings come from the
@@ -118,29 +108,19 @@ object Delta {
     * a tree is too large for a driver listing.
     */
   def getDeltaDataset(sourceUri0: String, targetUri0: String, checkContent: Boolean = false)(
-      implicit spark: SparkSession): org.apache.spark.sql.Dataset[DeltaEntry] = {
-    import spark.implicits._
-    val sourceUri = sourceUri0.stripSuffix("/")
-    val targetUri = targetUri0.stripSuffix("/")
-    val (src, trg, release) = hashedSides(sourceUri, targetUri, checkContent)
-    val keys = Seq("relPath", "isDirectory", "byteSize", "contentHash")
-    val missing = src.join(trg, keys, "left_anti")
-      .select($"relPath", $"isDirectory").as[(String, Boolean)]
-      .map { case (p, d) => DeltaEntry(p, DeltaEntry.MissingInTarget, d) }
-    val extra = trg.join(src, keys, "left_anti")
-      .select($"relPath", $"isDirectory").as[(String, Boolean)]
-      .map { case (p, d) => DeltaEntry(p, DeltaEntry.OnlyInTarget, d) }
+      implicit spark: SparkSession): Dataset[DeltaEntry] = {
+    val (src, trg, release) = hashedSides(sourceUri0.stripSuffix("/"), targetUri0.stripSuffix("/"), checkContent)
     // materialize the diff so the pinned sides (each referenced by two
     // anti-joins) can be released before returning; the caller owns the
     // returned persisted diff and should unpersist it when done
-    val diff = missing.union(extra).persist()
-    diff.count()
+    val out = diff(src, trg).persist()
+    out.count()
     release()
-    diff
+    out
   }
 
-  /** Both tree sides as (listing + relPath + content hash) DataFrames,
-    * plus the thunk that releases whatever they pinned.
+  /** Both tree sides as [[keyed]] distributed listings, plus the thunk
+    * that releases whatever they pinned.
     *
     * checkContent=false: the hash column is a constant, so the joins run
     * straight off the already-pinned listings — nothing extra cached, no
@@ -153,14 +133,11 @@ object Delta {
     * as drift and is re-copied) instead of aborting the job.
     */
   private def hashedSides(sourceUri: String, targetUri: String, checkContent: Boolean)(
-      implicit spark: SparkSession): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, () => Unit) = {
-    import spark.implicits._
+      implicit spark: SparkSession): (DataFrame, DataFrame, () => Unit) = {
     val srcList = Fs.listDistributed(spark, sourceUri)
     val trgList = Fs.listDistributed(spark, targetUri)
-    val src = withContentHash(srcList, checkContent)
-      .withColumn("relPath", relCol(sourceUri)($"path"))
-    val trg = withContentHash(trgList, checkContent)
-      .withColumn("relPath", relCol(targetUri)($"path"))
+    val src = keyed(srcList, sourceUri, checkContent)
+    val trg = keyed(trgList, targetUri, checkContent)
     if (!checkContent) {
       (src, trg, () => { srcList.unpersist(); trgList.unpersist(); () })
     } else {
@@ -179,53 +156,48 @@ object Delta {
     * (SURVEY §7.4) — the form to use when a tree has more entries than
     * driver memory holds. Deletes are recursive and idempotent, so no
     * deepest-first ordering is needed: a child whose ancestor another
-    * task already removed counts as deleted.
+    * task already removed counts as deleted. Deletes, mkdirs and copies
+    * each retry their failed subset ≤5 ([[DistributedRetry]]).
     */
   def synchronizeDistributed(sourceUri0: String, targetUri0: String, taskCount: Int = -1,
       checkContent: Boolean = false)(implicit spark: SparkSession): Unit = {
     import spark.implicits._
-    val sourceUri = new org.apache.hadoop.fs.Path(sourceUri0).toString
-    val targetUri = new org.apache.hadoop.fs.Path(targetUri0).toString
-    val (src, trg, release) = hashedSides(sourceUri, targetUri, checkContent)
-    val keys = Seq("relPath", "isDirectory", "byteSize", "contentHash")
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-
-    // target-only entries: recursive idempotent delete (empty relPath
-    // would be the target root — rel() already refuses those)
-    val extra = trg.join(src, keys, "left_anti")
-      .filter(length($"relPath") > 0).select($"relPath").as[String]
-    val delFailed = extra.mapPartitions { it =>
-      val c = conf.value
-      it.map { relPath =>
-        val p = new org.apache.hadoop.fs.Path(s"$targetUri/$relPath")
-        val ok = try { val fs = p.getFileSystem(c); fs.delete(p, true); !fs.exists(p) }
-                 catch { case _: Throwable => false }
-        FsOperationResult(relPath, ok)
-      }
-    }.filter(!_.success).count()
-    require(delFailed == 0, s"synchronizeDistributed: $delFailed deletes failed under $targetUri")
-
-    val missing = src.join(trg, keys, "left_anti")
-      .filter(length($"relPath") > 0)
-      .select($"relPath", $"isDirectory").persist()
+    val sourceUri = new Path(sourceUri0).toString
+    val targetUri = new Path(targetUri0).toString
+    val delta = getDeltaDataset(sourceUri, targetUri, checkContent)
+    // an empty relPath would be the target root — rel() already refuses those
+    def entries(message: String) = delta.filter($"message" === message && length($"path") > 0)
+    // target-only entries: recursive idempotent delete
+    onEachPathUnder(targetUri, entries(DeltaEntry.OnlyInTarget), "deletes") { (fs, p) =>
+      fs.delete(p, true)
+      !fs.exists(p)
+    }
     // source-only directories: recreate (copy below only moves files)
-    val mkdirFailed = missing.filter($"isDirectory").select($"relPath").as[String]
-      .mapPartitions { it =>
+    val missing = entries(DeltaEntry.MissingInTarget)
+    onEachPathUnder(targetUri, missing.filter($"isDirectory"), "mkdirs")(_.mkdirs(_))
+    // source-only files: distributed copy with retry
+    val files = missing.filter(!$"isDirectory")
+      .map(e => Paths(s"$sourceUri/${e.path}", s"$targetUri/${e.path}"))
+    DistributedExecution.copyDataset(files, taskCount).unpersist()
+    delta.unpersist()
+    ()
+  }
+
+  /** Run `effect` on `root/<entry path>` for every entry, in Spark
+    * tasks, retrying the failed subset ≤5.
+    */
+  private def onEachPathUnder(root: String, entries: Dataset[DeltaEntry], opName: String)(
+      effect: (FileSystem, Path) => Boolean)(implicit spark: SparkSession): Unit = {
+    import spark.implicits._
+    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    DistributedRetry.run[String](entries.map(_.path), "value", s"$opName under $root", (pending, _) =>
+      pending.mapPartitions { it =>
         val c = conf.value
         it.map { relPath =>
-          val p = new org.apache.hadoop.fs.Path(s"$targetUri/$relPath")
-          val ok = try p.getFileSystem(c).mkdirs(p) catch { case _: Throwable => false }
-          FsOperationResult(relPath, ok)
+          val p = new Path(s"$root/$relPath")
+          FsOperationResult.attempt(relPath)(effect(p.getFileSystem(c), p))
         }
-      }.filter(!_.success).count()
-    require(mkdirFailed == 0, s"synchronizeDistributed: $mkdirFailed mkdirs failed under $targetUri")
-    // source-only files: distributed copy with retry
-    val files = missing.filter(!$"isDirectory").select($"relPath").as[String]
-      .map(relPath => Paths(s"$sourceUri/$relPath", s"$targetUri/$relPath"))
-    DistributedExecution.copyDataset(files, taskCount)
-    missing.unpersist()
-    release()
-    ()
+      }).unpersist()
   }
 
   /** FNV-1a 64 of a file's bytes (streamed, 64 KiB buffer). A file that
@@ -240,7 +212,7 @@ object Delta {
     */
   private[graft] def contentHash(conf: org.apache.hadoop.conf.Configuration, uri: String): Long =
     try {
-      val p = new org.apache.hadoop.fs.Path(uri)
+      val p = new Path(uri)
       val in = p.getFileSystem(conf).open(p)
       try {
         var h = 0xcbf29ce484222325L
@@ -269,8 +241,8 @@ object Delta {
   def synchronize(sourceUri0: String, targetUri0: String, taskCount: Int = -1,
       checkContent: Boolean = false)(implicit spark: SparkSession): Unit = {
     implicit val conf = spark.sparkContext.hadoopConfiguration
-    val sourceUri = new org.apache.hadoop.fs.Path(sourceUri0).toString
-    val targetUri = new org.apache.hadoop.fs.Path(targetUri0).toString
+    val sourceUri = new Path(sourceUri0).toString
+    val targetUri = new Path(targetUri0).toString
     val (missing, extra) = getDelta(sourceUri, targetUri, checkContent)
     // delete deepest-first so children go before parents; an empty relPath
     // would resolve to the target ROOT — refuse rather than wipe it
@@ -282,7 +254,7 @@ object Delta {
     // recreate missing directories (copy handles files only); the diff
     // entries carry isDirectory from the listing, so no per-path re-stat
     missing.filter(_.isDirectory)
-      .foreach(e => fs.mkdirs(new org.apache.hadoop.fs.Path(s"$targetUri/${e.path}")))
+      .foreach(e => fs.mkdirs(new Path(s"$targetUri/${e.path}")))
     val pairs = missing.filterNot(_.isDirectory)
       .map(e => Paths(s"$sourceUri/${e.path}", s"$targetUri/${e.path}")).toIndexedSeq
     DistributedExecution.copyFiles(pairs, taskCount)

@@ -66,11 +66,8 @@ object DistributedExecution {
             // a self-copy with overwrite=true TRUNCATES the file before
             // reading it — refuse rather than destroy data (this is the
             // failure mode of a mis-spelled prefix rewrite upstream)
-            val ok =
-              if (p.sourcePath == p.targetPath) false
-              else try Fs.copySingleFile(c, p.sourcePath, p.targetPath)
-                   catch { case _: Throwable => false }
-            FsOperationResult(p.sourcePath, ok)
+            FsOperationResult.attempt(p.sourcePath)(
+              p.sourcePath != p.targetPath && Fs.copySingleFile(c, p.sourcePath, p.targetPath))
           }
         }, knownCount = total)
   }

@@ -3,7 +3,8 @@ package graft.fs
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** The distributed retry-failed loop shared by every side-effecting
-  * distributed operator (file copy, ACL application): run one attempt
+  * distributed operator (file copy, ACL application, the deletes and
+  * mkdirs of `Delta.synchronizeDistributed`): run one attempt
   * over the pending work, keep the successes, re-derive the failed
   * subset with a left_semi join on `keyCol` (no driver collect), retry
   * ≤ [[Retry.MaxAttempts]], then pin the final result set and release
@@ -30,19 +31,22 @@ object DistributedRetry {
     val attemptCaches = scala.collection.mutable.ListBuffer.empty[Dataset[FsOperationResult]]
     var attempt = 0
     var pendingCount = if (knownCount >= 0) knownCount else work.count()
+    var failed = spark.emptyDataset[FsOperationResult]
     while (pendingCount > 0 && attempt < Retry.MaxAttempts) {
       attempt += 1
       val res = attemptFn(pending, pendingCount).persist()
       attemptCaches += res
-      val failed = res.filter(!_.success)
-      val failedCount = failed.count()
+      failed = res.filter(!_.success)
+      pendingCount = failed.count()
       results = results.union(res.filter(_.success))
       pending = pending.join(failed.select($"path".as(keyCol)), Seq(keyCol), "left_semi").as[T]
-      pendingCount = failedCount
     }
-    if (pendingCount > 0)
+    if (pendingCount > 0) {
+      val named = failed.take(5).map(r => if (r.error.isEmpty) r.path else s"${r.path} (${r.error})")
+      attemptCaches.foreach(_.unpersist())
       throw new IllegalStateException(
-        s"$pendingCount $opName still failing after ${Retry.MaxAttempts} attempts")
+        s"$pendingCount $opName still failing after ${Retry.MaxAttempts} attempts: " + named.mkString(", "))
+    }
     results = results.persist()
     results.count()
     attemptCaches.foreach(_.unpersist())

@@ -13,11 +13,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 /** Tree scanning + size reporting over any Hadoop FileSystem.
   *
   * Semantics follow the reference (reference: fs/package.scala:23-119)
-  * with one 100 TB-scale deviation (SURVEY §7.4): above
-  * [[Fs.DriverListingLimit]] directories per level the breadth-first scan
-  * switches from driver futures to a level-synchronous distributed scan
-  * (`Dataset[String].flatMap(listStatus)` — one Spark job per tree level),
-  * so listings never OOM the driver.
+  * with one 100 TB-scale addition (SURVEY §7.4): next to the driver
+  * scan ([[Fs.list]], breadth-first on driver futures) sits a
+  * level-synchronous distributed scan ([[Fs.listDistributed]],
+  * `Dataset[String].flatMap(listStatus)` — one Spark job per tree level)
+  * whose listing never lands on the driver. The caller picks the form;
+  * nothing switches between them automatically.
   */
 object Fs {
 
@@ -27,8 +28,6 @@ object Fs {
     */
   @volatile var driverPoolSize: Int = 256
   val OpTimeout: FiniteDuration = 10.minutes
-  /** Max directories fanned out per level before switching to Spark. */
-  @volatile var DriverListingLimit: Int = 100000
 
   /** Resolve a FileSystem from a URI string (spaces sanitized — reference
     * fs/package.scala:23-25).
@@ -198,10 +197,10 @@ object Fs {
     FileUtil.copy(srcFs, src, dstFs, dst, false, true, conf)
   }
 
-  /** Rename only works within one FileSystem (reference fs/package.scala:126-129). */
   /** Fixed driver-side thread pool scoped to `body` — the one pool
-    * helper every multithreaded metadata operator (move/delete/ACL)
-    * shares, so sizing/shutdown fixes land in one place.
+    * helper every multithreaded driver operator (listing, the
+    * move/delete/ACL runner [[Retry.runPooled]], compaction) shares, so
+    * sizing/shutdown fixes land in one place.
     */
   private[graft] def withPool[T](threads: Int)(body: ExecutionContext => T): T = {
     val pool = Executors.newFixedThreadPool(threads.max(1).min(1000))
@@ -227,6 +226,7 @@ object Fs {
     to + p.stripPrefix(from)
   }
 
+  /** Rename only works within one FileSystem (reference fs/package.scala:126-129). */
   def checkIfFsIsTheSame(source: String, target: String): Boolean = {
     def auth(u: String) = { val x = new URI(u); (x.getScheme, x.getAuthority) }
     auth(source) == auth(target)

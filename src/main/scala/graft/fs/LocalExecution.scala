@@ -1,10 +1,5 @@
 package graft.fs
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.duration._
-import scala.concurrent.{Await, ExecutionContext, Future}
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
@@ -15,9 +10,6 @@ import org.apache.hadoop.fs.Path
   */
 object LocalExecution {
 
-  private def withPool[T](threads: Int)(body: ExecutionContext => T): T =
-    Fs.withPool(threads)(body)
-
   /** Multithreaded rename with retry ≤5 and false-negative repair: a
     * "failed" rename whose source is gone and target exists already took
     * effect (reference fs/LocalExecution.scala:70-97,151-157).
@@ -26,19 +18,9 @@ object LocalExecution {
       implicit conf: Configuration): Seq[FsOperationResult] = {
     if (paths.isEmpty) return Seq.empty
     val fs = Fs.getFileSystem(conf, paths.head.sourcePath)
-    Retry.retryFailed[Paths](
-      paths,
-      work => withPool(threads) { implicit ec =>
-        val fut = work.map { p => Future {
-          val ok = try fs.rename(new Path(p.sourcePath), new Path(p.targetPath))
-                   catch { case _: Throwable => false }
-          FsOperationResult(p.sourcePath, ok)
-        }}
-        fut.map(Await.result(_, Fs.OpTimeout))
-      },
-      _.sourcePath,
-      repair = failed => failed.filter(p =>
-        !fs.exists(new Path(p.sourcePath)) && fs.exists(new Path(p.targetPath))))
+    Retry.runPooled[Paths](paths, threads, _.sourcePath,
+      repair = _.filter(p => !fs.exists(new Path(p.sourcePath)) && fs.exists(new Path(p.targetPath))))(
+      p => fs.rename(new Path(p.sourcePath), new Path(p.targetPath)))
   }
 
   /** Safe folder-content move (reference fs/LocalExecution.scala:26-61):
@@ -133,17 +115,10 @@ object LocalExecution {
       implicit conf: Configuration): Seq[FsOperationResult] = {
     if (paths.isEmpty) return Seq.empty
     val fs = Fs.getFileSystem(conf, paths.head)
-    Retry.retryFailed[String](
-      paths,
-      work => withPool(threads) { implicit ec =>
-        val fut = work.map { p => Future {
-          val ok = try { fs.delete(new Path(p), true); !fs.exists(new Path(p)) }
-                   catch { case _: Throwable => false }
-          FsOperationResult(p, ok)
-        }}
-        fut.map(Await.result(_, Fs.OpTimeout))
-      },
-      identity)
+    Retry.runPooled[String](paths, threads, identity) { p =>
+      fs.delete(new Path(p), true)
+      !fs.exists(new Path(p))
+    }
   }
 
   /** Delete a folder, or only its level-1 contents (reference

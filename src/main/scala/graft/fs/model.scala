@@ -1,5 +1,7 @@
 package graft.fs
 
+import scala.util.control.NonFatal
+
 /** Core row types of the file-tree dataflow.
   *
   * Modeled on the reference's data model (reference:
@@ -13,8 +15,22 @@ final case class FsElement(path: String, isDirectory: Boolean, byteSize: Long)
 /** One unit of copy/move work: absolute source → absolute target URI. */
 final case class Paths(sourcePath: String, targetPath: String)
 
-/** Per-path outcome of an effectful FS operation; drives the retry loop. */
-final case class FsOperationResult(path: String, success: Boolean)
+/** Per-path outcome of an effectful FS operation; drives the retry loop.
+  * `error` names the exception (class and message) that failed the
+  * path, empty when the effect returned false or succeeded.
+  */
+final case class FsOperationResult(path: String, success: Boolean, error: String = "")
+
+object FsOperationResult {
+
+  /** The one place a path's effect becomes a result. A non-fatal throw
+    * is a failure that keeps its cause, for the retry loop to report;
+    * fatal errors (linkage, VM, interrupt) propagate to the caller.
+    */
+  def attempt(key: String)(effect: => Boolean): FsOperationResult =
+    try FsOperationResult(key, effect)
+    catch { case NonFatal(e) => FsOperationResult(key, success = false, e.toString) }
+}
 
 object DeltaEntry {
   val MissingInTarget = "copy"   // present in source, absent in target

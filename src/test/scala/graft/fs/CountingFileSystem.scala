@@ -1,19 +1,23 @@
 package graft.fs
 
+import java.io.FileNotFoundException
 import java.net.URI
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.permission.{AclEntry, FsPermission}
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, Path}
 import org.apache.hadoop.util.Progressable
 
 /** Synthetic FileSystem for concurrency assertions: `cnt:/` holds
   * [[CountingFileSystem.Width]] empty directories; every `listStatus`
-  * of one of them parks for [[CountingFileSystem.HoldMs]] while a
-  * global high-water mark records how many are in flight at once — so
-  * a spec can prove the listing pool really runs at its configured
-  * width (the r4 verdict found a hidden `.min(64)` clamp).
+  * of one of them, and every `getFileStatus`/`exists` of any path,
+  * parks for [[CountingFileSystem.HoldMs]] while a global high-water
+  * mark records how many are in flight at once — so a spec can prove
+  * the listing pool really runs at its configured width (the r4
+  * verdict found a hidden `.min(64)` clamp) and that per-path
+  * existence checks run on the pool, not one at a time. Any other path
+  * is absent. ACL calls are no-ops.
   */
 class CountingFileSystem extends FileSystem {
   import CountingFileSystem._
@@ -30,19 +34,30 @@ class CountingFileSystem extends FileSystem {
   private def dirStatus(p: String) =
     new FileStatus(0L, true, 1, 1L, 0L, new Path(s"cnt:$p"))
 
+  private def hold(): Unit = {
+    val now = active.incrementAndGet()
+    maxActive.updateAndGet(m => math.max(m, now))
+    try Thread.sleep(HoldMs)
+    finally active.decrementAndGet()
+  }
+
+  private def present(p: String): Boolean =
+    p == "/" || (0 until Width).exists(i => p == s"/d$i")
+
   override def listStatus(f: Path): Array[FileStatus] = {
     val p = Path.getPathWithoutSchemeAndAuthority(f).toString
     if (p == "/") (0 until Width).map(i => dirStatus(s"/d$i")).toArray
-    else {
-      val now = active.incrementAndGet()
-      maxActive.updateAndGet(m => math.max(m, now))
-      try { Thread.sleep(HoldMs); Array.empty }
-      finally active.decrementAndGet()
-    }
+    else { hold(); Array.empty }
   }
 
-  override def getFileStatus(f: Path): FileStatus =
-    dirStatus(Path.getPathWithoutSchemeAndAuthority(f).toString)
+  override def getFileStatus(f: Path): FileStatus = {
+    val p = Path.getPathWithoutSchemeAndAuthority(f).toString
+    hold()
+    if (present(p)) dirStatus(p) else throw new FileNotFoundException(s"cnt:$p")
+  }
+
+  override def modifyAclEntries(path: Path, aclSpec: java.util.List[AclEntry]): Unit = ()
+  override def removeAcl(path: Path): Unit = ()
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream =
     throw new UnsupportedOperationException("cnt: is list-only")

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.acl.{AclManager, FsPermission}
 
 class FsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -61,6 +62,46 @@ class FsSpec extends AnyFunSuite {
     // hidden .min(64) clamp would cap the high-water mark at 64
     val peak = CountingFileSystem.maxActive.get()
     assert(peak > 64, s"listing concurrency peaked at $peak - pool width not honored")
+  }
+
+  private def cntConf: Configuration = {
+    val c = new Configuration(conf)
+    c.set("fs.cnt.impl", classOf[CountingFileSystem].getName)
+    c.setBoolean("fs.cnt.impl.disable.cache", true)
+    c
+  }
+
+  test("ACL existence checks run on the pool, not one path at a time") {
+    val c = cntConf
+    val paths = (0 until 8).map(i => s"cnt:/d$i")
+    val perm = FsPermission("user", "rwx", "ACCESS", "u")
+    Seq[(String, () => Seq[FsOperationResult])](
+      "modifyAcls" -> (() => AclManager.modifyAcls(paths, perm)(c)),
+      "clearAcls" -> (() => AclManager.clearAcls(paths)(c))).foreach { case (name, op) =>
+      CountingFileSystem.reset()
+      val res = op()
+      assert(res.map(_.path).sorted == paths.sorted && res.forall(_.success), s"$name: $res")
+      // each exists() parks for HoldMs: a serial pre-pass on the caller
+      // thread never has two in flight
+      val peak = CountingFileSystem.maxActive.get()
+      assert(peak > 1, s"$name existence checks peaked at $peak in flight - they ran serially")
+    }
+  }
+
+  test("a path deleted before the call is the same skipped success for driver and distributed ACLs") {
+    val c = cntConf
+    val s = spark
+    import s.implicits._
+    val paths = Seq("cnt:/d0", "cnt:/gone")
+    val perm = FsPermission("user", "rwx", "ACCESS", "u")
+    def distributed(ds: org.apache.spark.sql.Dataset[FsOperationResult]) =
+      try ds.collect().toSet finally ds.unpersist()
+    val driverModify = AclManager.modifyAcls(paths, perm)(c).toSet
+    val driverClear = AclManager.clearAcls(paths)(c).toSet
+    assert(driverModify == paths.map(FsOperationResult(_, success = true)).toSet, driverModify)
+    assert(distributed(AclManager.modifyAclsDistributed(paths.toDS(), perm, c)(s)) == driverModify)
+    assert(driverClear == driverModify)
+    assert(distributed(AclManager.clearAclsDistributed(paths.toDS(), c)(s)) == driverClear)
   }
 
   test("dropFileDetail collapses files during the scan, preserving sizes") {

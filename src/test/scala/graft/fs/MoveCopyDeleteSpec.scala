@@ -328,4 +328,64 @@ class MoveCopyDeleteSpec extends AnyFunSuite {
     assert(e2.isEmpty, s"still extra: ${e2.take(5).mkString(",")}")
     assert(!fs.exists(new Path(s"$trg/junk.txt")))
   }
+
+  private def faultyFiles(prefix: String, n: Int): Seq[String] = {
+    FaultyFileSystem.register(conf)
+    val root = FaultyFileSystem.newRoot(prefix)
+    val fs = TestTree.fsFor(root)
+    (0 until n).map { i => val p = s"$root/f$i.bin"; TestTree.touch(fs, p); p }
+  }
+
+  test("a fatal error from the storage driver reaches the caller at once, unretried") {
+    val paths = faultyFiles("fatal", 3)
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val t0 = System.nanoTime()
+    val err = FaultyFileSystem.withHook { (op, _) =>
+      if (op == "delete") {
+        calls.incrementAndGet()
+        throw new NoClassDefFoundError("org/example/StorageDriver")
+      }
+    } {
+      intercept[NoClassDefFoundError](LocalExecution.deletePaths(paths))
+    }
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(err.getMessage == "org/example/StorageDriver")
+    // one attempt at most per path: a fatal error is not a failure to retry
+    assert(calls.get() >= 1 && calls.get() <= paths.size, s"${calls.get()} delete calls")
+    assert(seconds < 60, s"fatal error took $seconds s to surface")
+  }
+
+  test("retry exhaustion names the failing paths with their causes") {
+    val paths = faultyFiles("cause", 2)
+    val err = FaultyFileSystem.withHook { (op, p) =>
+      if (op == "delete") throw new java.io.IOException(s"quota exceeded on ${p.getName}")
+    } {
+      intercept[IllegalStateException](LocalExecution.deletePaths(paths))
+    }
+    paths.foreach { p =>
+      val name = new Path(p).getName
+      assert(err.getMessage.contains(s"(java.io.IOException: quota exceeded on $name)"), err.getMessage)
+    }
+  }
+
+  test("synchronizeDistributed retries transient delete failures") {
+    FaultyFileSystem.register(conf)
+    val src = FaultyFileSystem.newRoot("fsd_src"); TestTree.create(src, 33)
+    val trg = FaultyFileSystem.newRoot("fsd_trg")
+    DistributedExecution.copyFolder(s"$src/top1", s"$trg/top1")
+    val fs = TestTree.fsFor(trg)
+    TestTree.touch(fs, s"$trg/stale/junk.bin")
+    TestTree.touch(fs, s"$trg/top1/extra.bin")
+    val failedOnce = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    FaultyFileSystem.withHook { (op, p) =>
+      if (op == "delete" && failedOnce.add(p.toUri.getPath))
+        throw new java.io.IOException(s"injected transient failure for $p")
+    } {
+      Delta.synchronizeDistributed(src, trg)
+    }
+    assert(!failedOnce.isEmpty, "no delete was attempted")
+    val (m, e) = Delta.getDelta(src, trg)
+    assert(m.isEmpty && e.isEmpty, s"left behind: ${(m ++ e).take(5).mkString(",")}")
+    assert(!fs.exists(new Path(s"$trg/stale")) && !fs.exists(new Path(s"$trg/top1/extra.bin")))
+  }
 }
