@@ -259,14 +259,11 @@ object Similarity {
         col("pair_micro")).localCheckpoint()
     val wPick = Window.partitionBy(col("query_id"))
       .orderBy(col("mmr_nano").desc, col("neighbor_id"))
-    // first pick: pure relevance (no selected set to be redundant with)
-    var selected = rel
-      .withColumn("mmr_nano", lit(lambdaMilli) * col("rel_micro"))
-      .withColumn("_rn", row_number().over(wPick)).filter(col("_rn") === 1)
-      .select(col("query_id"), col("neighbor_id"),
-        lit(1L).as("mmr_rank"), col("rel_micro"), col("mmr_nano"))
-      .localCheckpoint()
-    for (i <- 2 to k) {
+    // rounds start from an EMPTY selection: the optimizer prunes every
+    // join against it, so round 1 is the pure-relevance first pick
+    val none = rel.select(col("query_id"), col("neighbor_id"), lit(0L).as("mmr_rank"),
+      col("rel_micro"), lit(0L).as("mmr_nano")).filter(lit(false))
+    val selected = graft.ops.Fixpoint.rounds(none, k, checkpoint = true) { (selected, i) =>
       val selIds = selected.select(col("query_id").as("_sq"),
         col("neighbor_id").as("_sid"))
       val maxPair = pairs
@@ -290,14 +287,9 @@ object Similarity {
         .withColumn("_rn", row_number().over(wPick)).filter(col("_rn") === 1)
         .select(col("query_id"), col("neighbor_id"),
           lit(i.toLong).as("mmr_rank"), col("rel_micro"), col("mmr_nano"))
-      val next = selected.unionByName(pick).localCheckpoint()
-      // next is materialized: the previous iteration's checkpoint (and,
-      // after the last pick, the pinned rel/pairs inputs) are dead
-      // weight — free per the [[graft.ops.Blocks]] one-live-checkpoint
-      // contract
-      graft.ops.Blocks.free(selected)
-      selected = next
+      selected.unionByName(pick)
     }
+    // the final selection is a checkpoint: the pinned inputs are dead
     graft.ops.Blocks.free(rel)
     graft.ops.Blocks.free(pairs)
     selected.orderBy(col("query_id"), col("mmr_rank"))

@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, OneRowRelation}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Block-manager hygiene for iterative operators and long-lived
   * sessions.
@@ -43,8 +45,7 @@ object Blocks {
     */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
 
@@ -58,24 +59,19 @@ object Blocks {
     * and a counting job would cost what this lookup gets for free.
     */
   def materializedBytes(df: DataFrame): Option[Long] = {
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var allCheckpoints = true
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => ids += lr.rdd.id
-      case leaf if leaf.children.isEmpty &&
-          leaf.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode] =>
-        leaf match {
-          case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
-          case _: org.apache.spark.sql.catalyst.plans.logical.OneRowRelation => ()
-          case _ => allCheckpoints = false
-        }
-      case _ => ()
+    // WithSubqueries: a non-checkpoint leaf inside a subquery expression
+    // (a scalar-subquery filter) makes the size unknown too
+    val leaves = df.queryExecution.analyzed.collectWithSubqueries { case l: LeafNode => l }
+    val ids = leaves.collect { case lr: LogicalRDD => lr.rdd.id }.distinct
+    val allCheckpoints = leaves.forall {
+      case _: LogicalRDD | _: LocalRelation | _: OneRowRelation => true
+      case _ => false
     }
     if (!allCheckpoints || ids.isEmpty) None
     else {
       val info = df.sparkSession.sparkContext.getRDDStorageInfo
         .filter(i => ids.contains(i.id))
-      if (info.length != ids.distinct.size) None
+      if (info.length != ids.size) None
       else Some(info.map(i => i.memSize + i.diskSize).sum)
     }
   }

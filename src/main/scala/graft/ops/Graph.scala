@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics in the Pregel-on-DataFrames shape:
@@ -44,29 +44,8 @@ object Graph {
     * frame too (the [[graft.ext.Dedup.clusters]] lineage rule).
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 3,
-      materialize: Boolean = true): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val joined = edges.join(deg, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    // materialize the node-id frame ONCE: the per-iteration zero-restore
-    // join otherwise embeds the caller's whole `nodes` subtree (for the
-    // crawl queries: a documents scan + link harvest + distinct) iters+1
-    // times in the final plan — r16 measured g10's single action at 16
-    // parquet scans / 44 exchanges from exactly this duplication
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-    var r = ids.select(col("id"), lit(1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(r.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr("rank div d").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(150000L) + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
-    }
-    r
-  }
+      materialize: Boolean = true): DataFrame =
+    rankFrom(nodes, rankEdges(edges, lit(1L)), None, iters, materialize)
 
   /** [[pageRank]] with CONVERGENCE DETECTION (the r12 verdict task 7
     * contract, [[labelPropagationConverged]]'s sibling): the same exact
@@ -92,48 +71,19 @@ object Graph {
       materialize: Boolean = true): (DataFrame, Int) = {
     require(maxIters >= 1, "maxIters must be >= 1")
     require(tolMicros >= 0L, "tolMicros must be >= 0")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val joined = edges.join(deg, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    // node ids materialized once — every round's zero-restore join
-    // would otherwise re-evaluate the caller's `nodes` subtree (see
-    // [[pageRank]]); freed before return (the result is a checkpoint).
-    // Guarded by `materialize` (r16 advice): an opt-out caller must not
-    // pay an eager job either — it accepts the per-round re-evaluation.
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-    var r = ids.select(col("id"), lit(1000000L).as("rank")).localCheckpoint()
-    var rounds = 0
-    var stable = false
-    while (rounds < maxIters && !stable) {
-      val contrib = e.join(r.select(col("id").as("src"), col("rank")), "src")
-        .select(col("dst").as("id"), expr("rank div d").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      // ONE job per round (r16 verdict task 5, the clusters fusion):
-      // the previous round's rank rides the LAZY checkpoint as `_prev`,
-      // and the tolerance count below is the checkpoint's materializing
-      // action — the old protocol (eager checkpoint job + a separate
-      // join-and-isEmpty action, the latter take-escalating over EVERY
-      // partition exactly when the round IS stable) paid 2+ driver jobs
-      // per round for the same information
-      val next = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(150000L) + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100"))
-            .as("rank"))
-        .join(r.select(col("id"), col("rank").as("_prev")), "id")
-        .localCheckpoint(false)
-      rounds += 1
-      stable = next.filter(abs(col("rank") - col("_prev")) > tolMicros)
-        .count() == 0L
-      // next is materialized (by the count) and has read r — the
-      // previous round's blocks are dead weight from here
-      // ([[graft.ops.Blocks]] contract: at most ONE live checkpoint
-      // survives the call, the returned frame)
-      Blocks.free(r)
-      r = next
-    }
-    if (materialize) Blocks.free(ids) // every consumer of ids has materialized
-    if (materialize) Blocks.free(e) // r is a checkpoint; e is no longer needed
+    val e = pin(rankEdges(edges, lit(1L)), materialize)
+    // node ids pinned once (see [[rankFrom]]) and freed before return.
+    // `materialize = false` exempts only the edge and node-id frames: the
+    // round-0 rank checkpoint in Fixpoint.converge always runs.
+    val ids = pin(nodes.select(col("id")), materialize)
+    val base = ids.select(col("id"), lit(150000L).as("floor"))
+    // the previous round's rank rides the round as `_prev`, so the
+    // tolerance count is the round's one materializing job
+    val (r, rounds, _) = Fixpoint.converge(
+        ids.select(col("id"), lit(1000000L).as("rank")), maxIters) { prev =>
+      rankStep(e, base, prev).join(prev.select(col("id"), col("rank").as("_prev")), "id")
+    }(abs(col("rank") - col("_prev")) > tolMicros)
+    if (materialize) { Blocks.free(ids); Blocks.free(e) } // r is a checkpoint
     (r.select(col("id"), col("rank")), rounds)
   }
 
@@ -163,27 +113,15 @@ object Graph {
   def pageRankPersonalized(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
       iters: Int = 3, materialize: Boolean = true): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val joined = edges.join(deg, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    val seeded0 = nodes.select(col("id"))
+    val e = pin(rankEdges(edges, lit(1L)), materialize)
+    // pinned once — referenced per iteration (see [[rankFrom]])
+    val seeded = pin(nodes.select(col("id"))
       .join(seeds.select(col("id")).distinct().withColumn("_s", lit(1)),
         Seq("id"), "left")
-      .select(col("id"), coalesce(col("_s"), lit(0)).as("is_seed"))
-    // materialized once — referenced per iteration (see [[pageRank]])
-    val seeded = if (materialize) seeded0.localCheckpoint() else seeded0
-    var r = seeded.select(col("id"), col("is_seed"),
-      (col("is_seed").cast("long") * 1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(r.select(col("id").as("src"), col("rank")), "src")
-        .select(col("dst").as("id"), expr("rank div d").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = seeded.join(contrib, Seq("id"), "left")
-        .select(col("id"), col("is_seed"),
-          (col("is_seed").cast("long") * 150000L +
-            expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
-    }
-    r.select(col("id"), col("rank"))
+      .select(col("id"), coalesce(col("_s"), lit(0)).as("is_seed")), materialize)
+    val base = seeded.select(col("id"), (col("is_seed").cast("long") * 150000L).as("floor"))
+    val r0 = seeded.select(col("id"), (col("is_seed").cast("long") * 1000000L).as("rank"))
+    (1 to iters).foldLeft(r0)((r, _) => rankStep(e, base, r))
   }
 
   /** Weight-proportional PageRank — [[pageRank]] with each node's rank
@@ -201,25 +139,8 @@ object Graph {
     * (optionally checkpointed) edge frame.
     */
   def pageRankWeighted(nodes: DataFrame, edges: DataFrame, iters: Int = 3,
-      weightCol: String = "w", materialize: Boolean = true): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    val wsum = edges.groupBy("src").agg(sum(col(weightCol)).as("ws"))
-    val joined = edges.join(wsum, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    // node ids materialized once — see [[pageRank]]
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-    var r = ids.select(col("id"), lit(1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(r.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr(s"rank * $weightCol div ws").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(150000L) + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
-    }
-    r
-  }
+      weightCol: String = "w", materialize: Boolean = true): DataFrame =
+    rankFrom(nodes, rankEdges(edges, col(weightCol)), None, iters, materialize)
 
   /** [[pageRankWeighted]] with a WARM-START rank vector — the
     * incremental-recrawl primitive behind [[RankIndex]]: instead of
@@ -243,26 +164,58 @@ object Graph {
     */
   def pageRankWeightedFrom(nodes: DataFrame, edges: DataFrame,
       init: DataFrame, iters: Int = 3, weightCol: String = "w",
-      materialize: Boolean = true): DataFrame = {
+      materialize: Boolean = true): DataFrame =
+    rankFrom(nodes, rankEdges(edges, col(weightCol)), Some(init), iters, materialize)
+
+  /** The fixed-round loop of [[pageRank]], [[pageRankWeighted]] and
+    * [[pageRankWeightedFrom]]: `iters` lazy [[rankStep]] rounds over the
+    * [[rankEdges]] frame `edges`, starting from `init` (id, rank) where
+    * it has a row and from the uniform 10⁶ prior elsewhere.
+    */
+  private def rankFrom(nodes: DataFrame, edges: DataFrame, init: Option[DataFrame],
+      iters: Int, materialize: Boolean): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val wsum = edges.groupBy("src").agg(sum(col(weightCol)).as("ws"))
-    val joined = edges.join(wsum, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    // node ids materialized once — see [[pageRank]]
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-    var r = ids
-      .join(init.select(col("id"), col("rank").as("_init")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("_init"), lit(1000000L)).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(r.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr(s"rank * $weightCol div ws").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(150000L) + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
+    val e = pin(edges, materialize)
+    // the node-id frame is pinned too: the per-round zero-restore join
+    // otherwise embeds the caller's whole `nodes` subtree (for the crawl
+    // queries: a documents scan + link harvest + distinct) iters+1 times
+    // in the final plan — r16 measured g10's single action at 16 parquet
+    // scans / 44 exchanges from exactly this duplication
+    val ids = pin(nodes.select(col("id")), materialize)
+    val r0 = init match {
+      case None => ids.select(col("id"), lit(1000000L).as("rank"))
+      case Some(i) => ids
+        .join(i.select(col("id"), col("rank").as("_init")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("_init"), lit(1000000L)).as("rank"))
     }
-    r
+    val base = ids.select(col("id"), lit(150000L).as("floor"))
+    (1 to iters).foldLeft(r0)((r, _) => rankStep(e, base, r))
+  }
+
+  /** (src, dst, w, ws): each edge with its integer weight `w` and its
+    * source's weight sum `ws`. The uniform operators pass w = 1, so ws
+    * is the out-degree and `rank * w div ws` is exactly `rank div deg`.
+    */
+  private def rankEdges(edges: DataFrame, w: Column): DataFrame = {
+    val we = weightedEdges(edges, w)
+    we.join(we.groupBy("src").agg(sum(col("w")).as("ws")), "src")
+  }
+
+  /** One round of every PageRank variant — the exact integer recurrence
+    *
+    *   rank'(v) = floor(v) + (85 · Σ_{u→v} (rank(u) · w div ws(u))) div 100
+    *
+    * over [[rankEdges]] `e`, from `r` (id, rank, …) onto `base`
+    * (id, floor): one join on src + one aggregation on dst + one left
+    * join back to the nodes.
+    */
+  private def rankStep(e: DataFrame, base: DataFrame, r: DataFrame): DataFrame = {
+    val contrib = e.join(r.select(col("id").as("src"), col("rank")), "src")
+      .select(col("dst").as("id"), expr("rank * w div ws").as("c"))
+      .groupBy("id").agg(sum("c").as("c"))
+    base.join(contrib, Seq("id"), "left")
+      .select(col("id"),
+        (col("floor") + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
   }
 
   /** HITS hubs-and-authorities over a weighted DIRECTED graph — the
@@ -293,56 +246,20 @@ object Graph {
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 2,
       weightCol: String = "w", materialize: Boolean = true): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val e0 = edges.select(col("src"), col("dst"), col(weightCol).as("w"))
-    val e = if (materialize) e0.localCheckpoint() else e0
-    // node ids materialized once — referenced by every half-step's
-    // zero-restore join (see [[pageRank]]: without this the caller's
-    // whole `nodes` subtree re-evaluates per half-step)
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-
-    // one weighted-sum + L1-normalize half-step: scores keyed by
-    // `from` flow along (from → to) edges and land keyed by `to`
-    def halfStep(scores: DataFrame, from: String, to: String): DataFrame = {
-      val raw = e.join(scores.withColumnRenamed("id", from), from)
-        .select(col(to).as("id"), (col("s") * col("w")).as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      val withZeros = ids.join(raw, Seq("id"), "left")
-        .select(col("id"), coalesce(col("c"), lit(0L)).as("c"))
-      val total = withZeros.agg(greatest(sum("c"), lit(1L)).as("tot"))
-      withZeros.crossJoin(broadcast(total))
-        .select(col("id"), expr("c * 1000000L div tot").as("s"))
-    }
-
-    // both vectors ride ONE combined (id, a_s, h_s) frame per round:
-    // one checkpoint job per round instead of two (the auth half-step's
-    // node-cardinality subtree re-evaluates inside the hub side of the
-    // same job — far cheaper than a whole extra driver job per round)
-    var cur = ids.select(col("id"), lit(0L).as("a_s"), lit(1000000L).as("h_s"))
-    var curOwned = false
-    for (_ <- 1 to iters) {
-      // materialize each round (the pageRankWeighted discipline —
-      // Graph.scala's join-chain lineage doubles per iteration, so an
-      // uncheckpointed run at iters=10+ builds an exponentially nested
-      // plan) and free the previous round's blocks immediately
-      // ([[graft.ops.Blocks]] contract)
-      val a = halfStep(cur.select(col("id"), col("h_s").as("s")), "src", "dst")
-      val h = halfStep(a, "dst", "src")
-      val nxt0 = a.withColumnRenamed("s", "a_s")
-        .join(h.withColumnRenamed("s", "h_s"), "id")
-      if (materialize) {
-        val nxt = nxt0.localCheckpoint()
-        if (curOwned) Blocks.free(cur)
-        cur = nxt; curOwned = true
-      } else cur = nxt0
-    }
+    val e = pin(weightedEdges(edges, col(weightCol)), materialize)
+    // node ids pinned once — referenced by every half-step's zero-restore
+    // join (see [[rankFrom]])
+    val ids = pin(nodes.select(col("id")), materialize)
+    // with `materialize` each round is checkpointed: the join-chain
+    // lineage doubles per round, so an unpinned run at iters=10+ builds
+    // an exponentially nested plan
+    val cur = Fixpoint.rounds(
+        ids.select(col("id"), lit(0L).as("a_s"), lit(1000000L).as("h_s")),
+        iters, checkpoint = materialize)((cur, _) => hitsRound(e, ids, cur))
     val out = cur.select(col("id"), col("h_s").as("hub_micro"),
       col("a_s").as("auth_micro"))
-    if (materialize) {
-      // the returned frame reads only the final round's checkpoint —
-      // edge and id blocks are dead weight from here
-      Blocks.free(e); Blocks.free(ids)
-    }
+    // the returned frame reads only the final round's checkpoint
+    if (materialize) { Blocks.free(e); Blocks.free(ids) }
     out
   }
 
@@ -370,59 +287,50 @@ object Graph {
       materialize: Boolean = true): (DataFrame, Int, Boolean) = {
     require(maxIters >= 1, "maxIters must be >= 1")
     require(tolMicros >= 0L, "tolMicros must be >= 0")
-    val e0 = edges.select(col("src"), col("dst"), col(weightCol).as("w"))
-    val e = if (materialize) e0.localCheckpoint() else e0
-    // node ids materialized once — see [[hits]]; freed before return.
-    // Guarded by `materialize` (r16 advice): an opt-out caller must not
-    // pay an eager job either — it accepts the per-round re-evaluation.
-    val ids1 = nodes.select(col("id"))
-    val ids = if (materialize) ids1.localCheckpoint() else ids1
-
-    def halfStep(scores: DataFrame, from: String, to: String): DataFrame = {
-      val raw = e.join(scores.withColumnRenamed("id", from), from)
-        .select(col(to).as("id"), (col("s") * col("w")).as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      val withZeros = ids.join(raw, Seq("id"), "left")
-        .select(col("id"), coalesce(col("c"), lit(0L)).as("c"))
-      val total = withZeros.agg(greatest(sum("c"), lit(1L)).as("tot"))
-      withZeros.crossJoin(broadcast(total))
-        .select(col("id"), expr("c * 1000000L div tot").as("s"))
-    }
-
-    // both vectors ride ONE combined (id, a_s, h_s) checkpoint per
-    // round (the [[hits]] r16 restructure), and the round's SINGLE
-    // driver job both materializes it and answers the stability
-    // question (r16 verdict task 5): the previous round's scores ride
-    // the LAZY checkpoint as `_pa`/`_ph` and the OR-filter count below
-    // is its materializing action — the old protocol (eager checkpoint
-    // job + a separate join-and-isEmpty, the latter take-escalating
-    // over every partition exactly when the round IS stable) paid 2+
-    // driver jobs per round for the same information
-    var cur = ids.select(col("id"), lit(0L).as("a_s"),
-      lit(1000000L).as("h_s")).localCheckpoint()
-    var rounds = 0
-    var stable = false
-    while (rounds < maxIters && !stable) {
-      val a = halfStep(cur.select(col("id"), col("h_s").as("s")), "src", "dst")
-      val h = halfStep(a, "dst", "src")
-      val nxt = a.withColumnRenamed("s", "a_s")
-        .join(h.withColumnRenamed("s", "h_s"), "id")
-        .join(cur.select(col("id"), col("a_s").as("_pa"),
-          col("h_s").as("_ph")), "id")
-        .localCheckpoint(false)
-      rounds += 1
-      stable = nxt.filter(abs(col("a_s") - col("_pa")) > tolMicros ||
-          abs(col("h_s") - col("_ph")) > tolMicros).count() == 0L
-      // nxt is materialized (by the count) and has read cur — the
-      // previous round's blocks are dead weight from here
-      Blocks.free(cur)
-      cur = nxt
-    }
+    val e = pin(weightedEdges(edges, col(weightCol)), materialize)
+    // node ids pinned once (see [[hits]]) and freed before return.
+    // `materialize = false` exempts only the edge and node-id frames: the
+    // round-0 score checkpoint in Fixpoint.converge always runs.
+    val ids = pin(nodes.select(col("id")), materialize)
+    // the previous round's scores ride the round as `_pa`/`_ph`, so the
+    // OR-filter count is the round's one materializing job
+    val (cur, rounds, stable) = Fixpoint.converge(
+        ids.select(col("id"), lit(0L).as("a_s"), lit(1000000L).as("h_s")), maxIters) { prev =>
+      hitsRound(e, ids, prev)
+        .join(prev.select(col("id"), col("a_s").as("_pa"), col("h_s").as("_ph")), "id")
+    }(abs(col("a_s") - col("_pa")) > tolMicros || abs(col("h_s") - col("_ph")) > tolMicros)
     val result = cur.select(col("id"), col("h_s").as("hub_micro"),
       col("a_s").as("auth_micro"))
-    if (materialize) Blocks.free(ids)
-    if (materialize) Blocks.free(e)
+    if (materialize) { Blocks.free(ids); Blocks.free(e) }
     (result, rounds, stable)
+  }
+
+  /** One full HITS round from `cur` (id, a_s, h_s, …): authorities from
+    * the current hubs, then hubs from the new authorities. Both vectors
+    * ride ONE combined (id, a_s, h_s) frame, so a checkpointed round is
+    * one job, not two (the auth half-step's node-cardinality subtree
+    * re-evaluates inside the hub side of the same job).
+    */
+  private def hitsRound(e: DataFrame, ids: DataFrame, cur: DataFrame): DataFrame = {
+    val a = halfStep(e, ids, cur.select(col("id"), col("h_s").as("s")), "src", "dst")
+    val h = halfStep(e, ids, a, "dst", "src")
+    a.withColumnRenamed("s", "a_s").join(h.withColumnRenamed("s", "h_s"), "id")
+  }
+
+  /** One weighted-sum + L1-normalize half-step: scores (id, s) keyed by
+    * `from` flow along the (from → to) edges of `e` (src, dst, w) and
+    * land keyed by `to`; nodes of `ids` that receive nothing hold 0.
+    */
+  private def halfStep(e: DataFrame, ids: DataFrame, scores: DataFrame,
+      from: String, to: String): DataFrame = {
+    val raw = e.join(scores.withColumnRenamed("id", from), from)
+      .select(col(to).as("id"), (col("s") * col("w")).as("c"))
+      .groupBy("id").agg(sum("c").as("c"))
+    val withZeros = ids.join(raw, Seq("id"), "left")
+      .select(col("id"), coalesce(col("c"), lit(0L)).as("c"))
+    val total = withZeros.agg(greatest(sum("c"), lit(1L)).as("tot"))
+    withZeros.crossJoin(broadcast(total))
+      .select(col("id"), expr("c * 1000000L div tot").as("s"))
   }
 
   /** Per-node triangle participation counts over an UNDIRECTED simple
@@ -516,29 +424,8 @@ object Graph {
     * `iters` (the [[graft.ext.Dedup.clusters]] lineage rule).
     */
   def labelPropagation(nodes: DataFrame, edges: DataFrame, iters: Int = 3,
-      materialize: Boolean = true): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    val e = if (materialize) edges.select("src", "dst").localCheckpoint()
-            else edges.select("src", "dst")
-    var l = nodes.select(col("id"), col("id").as("label"))
-    var lOwned = false // only free checkpoints THIS call created
-    for (_ <- 1 to iters) {
-      val votes = e.join(l.select(col("id").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      val pick = votes
-        .groupBy("id")
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-        .select(col("id"), col("m.label").as("picked"))
-      val next = l.join(pick, Seq("id"), "left")
-        .select(col("id"), coalesce(col("picked"), col("label")).as("label"))
-        .localCheckpoint()
-      if (lOwned) Blocks.free(l)
-      l = next; lOwned = true
-    }
-    if (materialize) Blocks.free(e) // final l is a checkpoint
-    l.select(col("id"), col("label").as("community"))
-  }
+      materialize: Boolean = true): DataFrame =
+    labelRounds(nodes, weightedEdges(edges, lit(1L)), iters, materialize)
 
   /** Weighted label propagation — [[labelPropagation]] with each
     * neighbor's vote counted at its EDGE WEIGHT instead of 1: on a
@@ -554,27 +441,21 @@ object Graph {
     */
   def labelPropagationWeighted(nodes: DataFrame, edges: DataFrame,
       iters: Int = 3, weightCol: String = "w",
-      materialize: Boolean = true): DataFrame = {
+      materialize: Boolean = true): DataFrame =
+    labelRounds(nodes, weightedEdges(edges, col(weightCol)), iters, materialize)
+
+  /** The fixed-round loop of [[labelPropagation]] and
+    * [[labelPropagationWeighted]] over (src, dst, w) `edges`. Labels are
+    * checkpointed every round whatever `materialize` says, so plan depth
+    * stays constant in `iters`.
+    */
+  private def labelRounds(nodes: DataFrame, edges: DataFrame, iters: Int,
+      materialize: Boolean): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val e0 = edges.select(col("src"), col("dst"), col(weightCol).as("_w"))
-    val e = if (materialize) e0.localCheckpoint() else e0
-    var l = nodes.select(col("id"), col("id").as("label"))
-    var lOwned = false // only free checkpoints THIS call created
-    for (_ <- 1 to iters) {
-      val votes = e.join(l.select(col("id").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(sum(col("_w")).as("c"))
-      val pick = votes
-        .groupBy("id")
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-        .select(col("id"), col("m.label").as("picked"))
-      val next = l.join(pick, Seq("id"), "left")
-        .select(col("id"), coalesce(col("picked"), col("label")).as("label"))
-        .localCheckpoint()
-      if (lOwned) Blocks.free(l)
-      l = next; lOwned = true
-    }
-    if (materialize) Blocks.free(e) // final l is a checkpoint
+    val e = pin(edges, materialize)
+    val l = Fixpoint.rounds(nodes.select(col("id"), col("id").as("label")),
+      iters, checkpoint = true)((l, _) => voteStep(e, l).drop("_prev"))
+    if (materialize) Blocks.free(e) // the final round is a checkpoint
     l.select(col("id"), col("label").as("community"))
   }
 
@@ -600,49 +481,51 @@ object Graph {
     * Why it exists (r12 verdict task 7): a fixed iters=3 on a 100 TB
     * pair graph with one long path component silently under-propagates
     * — labels stop 3 hops out and the community split looks plausible.
-    * Detection costs one node-sized anti-join per round against the
-    * previous (localCheckpointed) labels — noise next to the round's
-    * own edge join, and it BOUNDS total rounds by the actual label
-    * diameter instead of a guess.
+    * Detection costs no extra job: the previous label rides the round
+    * and the changed-label count is the round's one materializing job
+    * ([[Fixpoint.converge]]), and it BOUNDS total rounds by the actual
+    * label diameter instead of a guess.
     */
   def labelPropagationConverged(nodes: DataFrame, edges: DataFrame,
       maxIters: Int = 32, weightCol: Option[String] = None,
       materialize: Boolean = true): (DataFrame, Int, Boolean) = {
     require(maxIters >= 1, "maxIters must be >= 1")
-    val e0 = weightCol match {
-      case Some(w) => edges.select(col("src"), col("dst"), col(w).as("_w"))
-      case None    => edges.select(col("src"), col("dst"), lit(1L).as("_w"))
-    }
-    val e = if (materialize) e0.localCheckpoint() else e0
-    var l = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-    var rounds = 0
-    var stable = false
-    while (rounds < maxIters && !stable) {
-      val votes = e.join(l.select(col("id").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(sum(col("_w")).as("c"))
-      val pick = votes
-        .groupBy("id")
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-        .select(col("id"), col("m.label").as("picked"))
-      // ONE job per round (r16 verdict task 5, the clusters fusion):
-      // `_prev` already rides the round frame, so the LAZY checkpoint's
-      // materializing action IS the stability count — the old eager
-      // checkpoint + isEmpty (take-escalating over every partition
-      // exactly when the round IS stable) paid 2+ jobs per round
-      val next = l.join(pick, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("picked"), col("label")).as("label"),
-          col("label").as("_prev"))
-        .localCheckpoint(false)
-      rounds += 1
-      stable = next.filter(col("label") =!= col("_prev")).count() == 0L
-      Blocks.free(l) // next is materialized; the previous round is dead
-      l = next.select(col("id"), col("label"))
-    }
-    if (materialize) Blocks.free(e) // final l is a checkpoint
+    val e = pin(weightedEdges(edges, weightCol.fold(lit(1L))(col)), materialize)
+    val (l, rounds, stable) = Fixpoint.converge(
+        nodes.select(col("id"), col("id").as("label")), maxIters)(voteStep(e, _))(
+      col("label") =!= col("_prev"))
+    if (materialize) Blocks.free(e) // the final round is a checkpoint
     (l.select(col("id"), col("label").as("community")), rounds, stable)
   }
+
+  /** One synchronous vote round of every label-propagation variant over
+    * (src, dst, w) edges: each node adopts the label with the largest
+    * vote weight among its in-neighbors (ties to the smallest label),
+    * and keeps its own when it receives no vote. Returns
+    * (id, label, _prev) — the old label rides along for the stability
+    * count of [[labelPropagationConverged]].
+    */
+  private def voteStep(e: DataFrame, l: DataFrame): DataFrame = {
+    val pick = e.join(l.select(col("id").as("src"), col("label")), "src")
+      .groupBy(col("dst").as("id"), col("label"))
+      .agg(sum(col("w")).as("c"))
+      .groupBy("id")
+      .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
+      .select(col("id"), col("m.label").as("picked"))
+    l.join(pick, Seq("id"), "left")
+      .select(col("id"), coalesce(col("picked"), col("label")).as("label"),
+        col("label").as("_prev"))
+  }
+
+  /** (src, dst, w) with `w` the integer edge weight. */
+  private def weightedEdges(edges: DataFrame, w: Column): DataFrame =
+    edges.select(col("src"), col("dst"), w.as("w"))
+
+  /** `df` checkpointed once when `materialize`, else as is — for the
+    * loop-invariant inputs every round reads.
+    */
+  private def pin(df: DataFrame, materialize: Boolean): DataFrame =
+    if (materialize) df.localCheckpoint() else df
 
   /** Link-prediction scores over an UNDIRECTED simple graph: for every
     * unordered node pair sharing at least one neighbor (the 2-hop

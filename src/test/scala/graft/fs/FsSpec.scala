@@ -149,7 +149,7 @@ class FsSpec extends AnyFunSuite {
     val listing =
       try {
         val l = Fs.listDistributed(spark, root)
-        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+        org.apache.spark.GraftBridge.waitForListeners(spark.sparkContext)
         l
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(listing.collect().map(e => (e.path, e.isDirectory, e.byteSize)).toSet ==

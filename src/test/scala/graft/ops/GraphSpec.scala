@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -425,5 +426,40 @@ class GraphSpec extends AnyFunSuite {
     //   915000 + 235000 + 10⁶ = 2150000
     //   → 150000 + 85·2150000 div 100 = 1977500
     assert(w1(1L) == 1977500L, w1.toString)
+  }
+
+  test("iterative operators: at most two live checkpoints after the call; a checkpointed caller input survives") {
+    // residency: the pinned inputs and per-round checkpoints are freed
+    // (only pageRank's lazy result still reads its edge and id pins);
+    // ownership: an operator frees only checkpoints it created, so a
+    // caller's own checkpointed input stays readable after the call
+    val und = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 1L)).toDF("src", "dst", "w")
+    val edges = und.union(und.select(col("dst"), col("src"), col("w")))
+    val nodes = (1L to 5L).toDF("id")
+    val pool = Seq((1L, 10L, 0.9), (1L, 11L, 0.8), (1L, 12L, 0.5))
+      .toDF("query_id", "neighbor_id", "sim")
+    val pairs = Seq((1L, 10L, 11L, 950000L), (1L, 11L, 10L, 950000L))
+      .toDF("query_id", "a", "b", "pair_micro")
+    val cases: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
+      ("pageRank", nodes, Graph.pageRank(_, edges, iters = 3)),
+      ("pageRankConverged", nodes, Graph.pageRankConverged(_, edges, maxIters = 50)._1),
+      ("hits", nodes, Graph.hits(_, edges, iters = 3)),
+      ("hitsConverged", nodes, Graph.hitsConverged(_, edges, maxIters = 50)._1),
+      ("labelPropagation", nodes, Graph.labelPropagation(_, edges, iters = 3)),
+      ("labelPropagationConverged", nodes,
+        Graph.labelPropagationConverged(_, edges, maxIters = 20)._1),
+      ("mmrRerank", pool, graft.ext.Similarity.mmrRerank(_, pairs, k = 3)))
+    for ((name, input0, op) <- cases) withClue(s"$name: ") {
+      val input = input0.localCheckpoint()
+      val rows = input.collect().toSet
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val out = op(input)
+      out.collect()
+      val after = spark.sparkContext.getPersistentRDDs.size
+      assert(after - before <= 2, s"live checkpoint RDDs $before -> $after")
+      assert(input.collect().toSet == rows)
+      Blocks.free(out)
+      Blocks.free(input)
+    }
   }
 }
